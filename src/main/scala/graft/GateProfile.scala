@@ -19,17 +19,15 @@ object GateProfile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config(Tables.requiredConfs)
-    // experiment knob: SPARK_GRAFT_PROF_CONFS="k=v;k2=v2" (diagnostic
-    // only — the bench/driver never sets it)
-    val spark = sys.env.get("SPARK_GRAFT_PROF_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0).getOrCreate()
+      // experiment knob: SPARK_GRAFT_PROF_CONFS="k=v;k2=v2" (diagnostic
+      // only — the bench/driver never sets it)
+      .config(GraftSession.envConfs("SPARK_GRAFT_PROF_CONFS"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(gate)
 

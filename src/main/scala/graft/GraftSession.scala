@@ -31,4 +31,21 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Session confs from env var `name` as `k=v;k2=v2` (unset or empty:
+    * none). The diagnostic A/B knobs (`SPARK_GRAFT_PROF_CONFS`,
+    * `SPARK_GRAFT_STREAM_CONFS`) read through this. */
+  def envConfs(name: String): Map[String, String] =
+    parseConfs(name, sys.env.getOrElse(name, ""))
+
+  /** An entry without `=` or with an empty key fails naming the
+    * variable and the entry, not with a bare MatchError. */
+  def parseConfs(name: String, raw: String): Map[String, String] =
+    raw.split(";").iterator.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"$name: malformed entry '$kv', expected key=value (entries separated by ';')")
+      }
+    }.toMap
 }

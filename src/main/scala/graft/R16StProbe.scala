@@ -21,17 +21,15 @@ object R16StProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config(Tables.requiredConfs)
-    // session-conf A/B knob (GateProfile's SPARK_GRAFT_PROF_CONFS,
-    // same syntax) — for the per-action-floor experiments
-    val spark = sys.env.get("SPARK_GRAFT_PROF_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0).getOrCreate()
+      // session-conf A/B knob (GateProfile's SPARK_GRAFT_PROF_CONFS,
+      // same syntax) — for the per-action-floor experiments
+      .config(GraftSession.envConfs("SPARK_GRAFT_PROF_CONFS"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val confNote = sys.env.getOrElse("SPARK_GRAFT_STREAM_CONFS", "<default>")
     println(s"== R16StProbe confs: $confNote parts=${

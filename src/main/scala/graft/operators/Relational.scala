@@ -264,27 +264,35 @@ object Relational {
     * layout. The write happens at gate time (la6's sink-gate
     * honesty); the oracle is layout-independent plain SQL. */
   private def q10(s: SparkSession, d: String): DataFrame = {
-    val base = TmpDirs.reclaimAtExit(
-      s"${Scratch.root}/graft_bucketed/${d.replace('/', '_')}")
+    // own layout dir and table names per execution, so overlapping
+    // executions never overwrite each other's buckets; the returned
+    // frame reads them lazily, so the dir lives until JVM exit
+    val base = TmpDirs.exitScopedRoot("bucketed")
+    val id = java.util.UUID.randomUUID().toString.replace('-', '_')
+    val (cust, ord) = (s"graft_q10_customer_$id", s"graft_q10_orders_$id")
     Bucketing.writeBucketed(
       Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
-      "graft_q10_customer", s"$base/customer", 8, Seq("c_custkey"))
+      cust, s"$base/customer", 8, Seq("c_custkey"))
     Bucketing.writeBucketed(
       Tables.orders(s, d).select(col("o_custkey"),
         expr("cast(floor(o_totalprice * 100) as bigint)").as("price_cents")),
-      "graft_q10_orders", s"$base/orders", 8, Seq("o_custkey"))
+      ord, s"$base/orders", 8, Seq("o_custkey"))
     // hint("merge"): at bench SFs the customer side fits the broadcast
     // threshold and Catalyst (correctly) prefers BroadcastHashJoin —
     // but the shape this gate exists to demonstrate is the 100 TB one,
     // where NEITHER side broadcasts and the bucketed layout is what
     // deletes the exchange. The hint pins that plan; the layout (not
     // the hint) is what makes it exchange- and sort-free.
-    s.table("graft_q10_orders").hint("merge")
-      .join(s.table("graft_q10_customer"),
-        col("o_custkey") === col("c_custkey"))
+    val out = s.table(ord).hint("merge")
+      .join(s.table(cust), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("price_cents")).as("revenue_cents"))
+    // the analyzed frame holds both relations (bucket spec included),
+    // so the catalog entries can go now instead of accumulating; the
+    // tables are external, so DROP leaves the files
+    Seq(cust, ord).foreach(t => s.sql(s"DROP TABLE $t"))
+    out
   }
 
   private val q10Sql =
@@ -489,8 +497,10 @@ object Relational {
     * losslessly, count(*) becomes sum(cnt), extrema re-extremize. */
   private def q15(s: SparkSession, d: String): DataFrame = {
     import graft.plans.{SummaryDef, SummaryRegistry}
-    val sumDir = TmpDirs.reclaimAtExit(
-      s"${Scratch.root}/graft_summary/${d.replace('/', '_')}/lineitem_rf_ls")
+    // own summary dir per execution: an overlapping execution may be
+    // served from this one's def (see unregister below), so it lives
+    // until JVM exit
+    val sumDir = s"${TmpDirs.exitScopedRoot("summary")}/lineitem_rf_ls"
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"),
@@ -499,7 +509,7 @@ object Relational {
         min(col("l_discount")).as("min_disc_p"),
         max(col("l_discount")).as("max_disc_p"))
       .write.mode("overwrite").parquet(sumDir)
-    SummaryRegistry.register(SummaryDef(
+    val sdef = SummaryDef(
       factPath = s"$d/lineitem.parquet",
       summaryPath = sumDir,
       keys = Seq("l_returnflag", "l_linestatus"),
@@ -512,7 +522,8 @@ object Relational {
       // staleness token: the rewrite only serves while the fact's
       // listing still matches the one this summary was built from
       factFingerprint =
-        Some(SummaryRegistry.factFingerprint(s, s"$d/lineitem.parquet"))))
+        Some(Tables.listingFingerprint(s, s"$d/lineitem.parquet")))
+    SummaryRegistry.register(sdef)
     try {
       // written against the FACT table; the rule swaps in the summary
       Tables.lineitem(s, d)
@@ -524,7 +535,7 @@ object Relational {
           min(col("l_discount")).as("min_disc"),
           max(col("l_discount")).as("max_disc"))
         .localCheckpoint() // materialize while the def is registered
-    } finally SummaryRegistry.unregister(s"$d/lineitem.parquet")
+    } finally SummaryRegistry.unregister(sdef)
   }
 
   private val q15Sql =

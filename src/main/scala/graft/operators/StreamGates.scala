@@ -222,12 +222,10 @@ object StreamGates {
     * ("k=v;k2=v2") — the instrument for state-store provider /
     * maintenance / log-knob experiments the r15 verdict asked for.
     * Empty (a no-op) unless the env var is set; never set by the
-    * bench or the driver. */
-  private val streamAbConfs: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_STREAM_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").toSeq.map { kv =>
-        val Array(k, v) = kv.split("=", 2); k -> v
-      }.toMap).getOrElse(Map.empty)
+    * bench or the driver. Lazy, so a malformed value fails the first
+    * replay with its own message, not the object's initializer. */
+  private lazy val streamAbConfs: Map[String, String] =
+    graft.GraftSession.envConfs("SPARK_GRAFT_STREAM_CONFS")
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
     * store commit machinery scales with partitions × batches (each

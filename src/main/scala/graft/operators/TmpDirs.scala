@@ -81,26 +81,17 @@ private[graft] object TmpDirs {
     f.delete(); ()
   }
 
-  /** For the one gate shape that must RETURN a lazy frame over its
+  /** For the gate shapes that must RETURN a lazy frame over their
     * staged files (la6: the spec pins partition pruning in the
-    * returned plan, so the read-back cannot be collected away): the
-    * dir lives until JVM exit (the StreamGates replay-root
-    * discipline), then is reclaimed by the shutdown hook — still
-    * never accumulating across runs. */
+    * returned plan, so the read-back cannot be collected away; q10's
+    * bucketed layout) or whose files an overlapping execution may
+    * read (q15's summary): the dir lives until JVM exit (the
+    * StreamGates replay-root discipline), then is reclaimed by the
+    * shutdown hook — still never accumulating across runs. */
   def exitScopedRoot(tag: String): String = {
     val dir =
       s"${Scratch.root}/graft_${tag}_${java.util.UUID.randomUUID()}"
     exitRoots.add(new java.io.File(dir))
     dir
-  }
-
-  /** For DETERMINISTIC paths that must stay stable within a run so
-    * reruns overwrite instead of accumulating (q10's bucketed layout,
-    * q15's summary), but must still be reclaimed at JVM exit — they'd
-    * otherwise persist forever on tmpfs. Idempotent. */
-  def reclaimAtExit(path: String): String = {
-    val f = new java.io.File(path)
-    if (!exitRoots.contains(f)) exitRoots.add(f)
-    path
   }
 }

@@ -30,7 +30,7 @@ final case class SummaryDef(
     mins: Map[String, String] = Map.empty,
     maxs: Map[String, String] = Map.empty,
     /** Fact-listing fingerprint captured when the summary was built
-      * (via [[SummaryRegistry.factFingerprint]]): the STALENESS
+      * (via [[graft.Tables.listingFingerprint]]): the STALENESS
       * contract. A rewrite only serves while the fact's current file
       * listing still matches — a read arriving between fact-append and
       * summary-refresh falls back to the fact scan instead of being
@@ -51,32 +51,13 @@ object SummaryRegistry {
   def unregister(factPath: String): Unit = synchronized {
     current = current.filterNot(_.factPath == factPath)
   }
-  def defs: Seq[SummaryDef] = current
-
-  /** Order-independent fingerprint of a fact location's CURRENT data
-    * file listing (path, length, mtime — hidden/metadata files
-    * excluded, matching what a scan would read). O(|files|) metadata
-    * traffic, the same cost class as the lakehouse gates' manifest
-    * algebra — paid once at summary build and once per candidate
-    * rewrite compile, never per row. */
-  def factFingerprint(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    var h = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        var e = 1125899906842597L
-        e = e * 31 + f.getPath.toString.hashCode
-        e = e * 31 + f.getLen
-        e = e * 31 + f.getModificationTime
-        h ^= e // XOR-fold: listing order never matters
-      }
-    }
-    h
+  /** Remove `d` only while it is still registered: an overlapping
+    * execution that registered its own def for the same fact since
+    * keeps it. */
+  def unregister(d: SummaryDef): Unit = synchronized {
+    current = current.filterNot(_ == d)
   }
+  def defs: Seq[SummaryDef] = current
 }
 
 /** Aggregate-navigation (materialized-view) rewrite: an `Aggregate`
@@ -103,7 +84,7 @@ object SummaryRegistry {
   * and the plan is left untouched. An empty-group global aggregate is
   * also vetoed (a summary has no row for "fact was empty", so
   * `count(*)=0` would become `sum(cnt)=NULL`). STALENESS is a veto
-  * too: a def registered with [[SummaryRegistry.factFingerprint]]
+  * too: a def registered with [[graft.Tables.listingFingerprint]]
   * only serves while the fact's current file listing matches — the
   * window between a fact append and the summary refresh reads the
   * fact, never the stale rollup.
@@ -127,7 +108,7 @@ class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       val fpCache = scala.collection.mutable.Map.empty[String, Option[Long]]
       def freshFp(path: String): Option[Long] =
         fpCache.getOrElseUpdate(path,
-          scala.util.Try(SummaryRegistry.factFingerprint(session, path)).toOption)
+          scala.util.Try(graft.Tables.listingFingerprint(session, path)).toOption)
       plan.transformUp {
         case agg: Aggregate => tryRewrite(agg, freshFp).getOrElse(agg)
       }
@@ -207,8 +188,9 @@ class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       filters: List[Expression]): Option[LogicalPlan] = {
     // Fresh analyzed scan of the summary per rewrite: reusing one plan
     // would duplicate exprIds if the same summary served twice in one
-    // query (e.g. a self-join of two rewritten rollups).
-    val summary = session.read.parquet(d.summaryPath).queryExecution.analyzed
+    // query (e.g. a self-join of two rewritten rollups). Only its
+    // schema is cached (graft.Tables), so no inference job per rewrite.
+    val summary = graft.Tables.parquet(session, d.summaryPath).queryExecution.analyzed
     val out: Map[String, Attribute] = summary.output.map(a => a.name -> a).toMap
 
     def keyAttr(n: String): Option[Attribute] =

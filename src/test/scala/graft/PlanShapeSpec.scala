@@ -558,11 +558,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // plan (assignment, probe ranking, query set) and at most 7× in
     // sim18's (those three + sim1's two truth sides + the volume
     // leg's probes + cell sizes) — the join-back scans are gone.
-    for ((g, cap) <- Seq("sim6_ivf_search" -> 3, "sim18_nprobe_curve" -> 7)) {
+    for ((g, want) <- Seq("sim6_ivf_search" -> 3, "sim18_nprobe_curve" -> 7)) {
       val lp = gate(g, sf0001).queryExecution.optimizedPlan.toString
       val n = "Relation \\[vec_id".r.findAllIn(lp).length
-      assert(n <= cap && n > 0,
-        s"$g: expected 1..$cap embeddings scans in the optimized plan, got $n")
+      assert(n == want,
+        s"$g: expected exactly $want embeddings scans in the optimized plan, got $n")
     }
   }
 }

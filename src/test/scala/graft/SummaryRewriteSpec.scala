@@ -133,7 +133,7 @@ class SummaryRewriteSpec extends AnyFunSuite {
       factPath = fact, summaryPath = sumDir,
       keys = Seq("l_returnflag", "l_linestatus"), cntCol = "cnt",
       sums = Map.empty,
-      factFingerprint = Some(SummaryRegistry.factFingerprint(spark, fact))))
+      factFingerprint = Some(Tables.listingFingerprint(spark, fact))))
     def q(): DataFrame = spark.read.parquet(fact)
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
     try {
